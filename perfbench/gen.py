@@ -21,6 +21,9 @@ import os
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from hybrid_nutrition_data_pipeline_batch_streaming_spark.pipeline import (
+    NUTRITION_FIELDS,
+)
 
 #: Row counts at sf 0.01; other scale factors multiply the large tables.
 SF001_ROWS = {
@@ -194,19 +197,6 @@ def write_fixtures(out_dir: str, seed: int, sf: float) -> dict[str, int]:
 # --------------------------------------------------------------------------
 # ingest waves (FIXTURES.md B2/B3 shape)
 
-NUTRITION_FIELDS = (
-    "calories",
-    "serving_size_g",
-    "fat_total_g",
-    "fat_saturated_g",
-    "protein_g",
-    "sodium_mg",
-    "potassium_mg",
-    "cholesterol_mg",
-    "carbohydrates_total_g",
-    "fiber_g",
-    "sugar_g",
-)
 FOODS = ["toast", "rice", "salad", "soup", "curry", "taco", "bowl", "wrap"]
 RAW_SCHEMA = pa.schema(
     [

@@ -19,7 +19,7 @@ import pytest
 
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH_DIR)
-sys.path.insert(0, BENCH_DIR)
+sys.path[:0] = [ROOT, BENCH_DIR]
 
 import gen  # noqa: E402
 import run  # noqa: E402
