@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+and prints ONE JSON line: {"metric": ..., "unit": "sec", "queries": {name:
+sec, ...}, "cpus": ..., "master": ..., "codegen_compiles": ..., "value":
+total_sec, "sf": ...}.
 
 Queries execute to a noop sink so timings measure full plan execution
 (scan → shuffle → agg) without driver-collect transfer noise.
@@ -19,7 +20,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hybrid_nutrition_data_pipeline_batch_streaming_spark import plans  # noqa: E402
-from hybrid_nutrition_data_pipeline_batch_streaming_spark.session import get_spark  # noqa: E402
+from hybrid_nutrition_data_pipeline_batch_streaming_spark.session import (  # noqa: E402
+    default_parallelism,
+    get_spark,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -205,6 +209,11 @@ def main() -> None:
         cal = min(cal, time.perf_counter() - t0)
     calibration_s = round(cal, 3)
 
+    # Whole-stage-codegen compiles over the timed passes. "Cold" below means
+    # data caches only: the JVM-wide generated-class cache stays warm, and
+    # this counts the classes it missed.
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     # Best-of-3 per query, COLD-cache convention (VERDICT r7 item 2): every
     # repeat starts from an empty CacheManager — the registry wrapper
     # releases all cached fragments at each top-level query invocation, and
@@ -233,6 +242,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             runs[name].append(time.perf_counter() - t0)
     spark.catalog.clearCache()
+    codegen_compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
     # 2-decimal seconds (VERDICT r12 item 2): the driver's PERF comparison
     # reads this line from a bounded stdout tail, and BENCH_r05-r11 all
     # failed to parse because the line outgrew the captured window. Two
@@ -256,6 +266,9 @@ def main() -> None:
             "metric": "headline_queries_total_runtime",
             "unit": "sec",
             "queries": timings,
+            "cpus": default_parallelism(),
+            "master": spark.sparkContext.master,
+            "codegen_compiles": codegen_compiles,
             "value": total,
             "sf": sf,
             "cache_convention": "cold",

@@ -31,7 +31,9 @@ state falls into; NOTES.md (round 9) carries the per-site audit table.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: SQL (runtime-settable) configs every session should carry. Applied both at
@@ -64,6 +66,17 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+#: Size of the JVM-wide generated-class cache (the static
+#: ``spark.sql.codegen.cache.maxEntries``, default 100). The working sets it
+#: must hold, counted as ``CodegenMetrics`` compiles of one pass on a fresh
+#: JVM: the 16 dashboard tiles of ``perfbench``'s ``bi_dashboard`` need 271
+#: classes; one pass of ``bench.py``'s 93 headline queries at sf0.1 needs
+#: 1665, and a second pass adds 44 (queries whose plan varies per call).
+#: 4000 leaves more than 2x headroom over the larger. A cached class costs
+#: about 8 KB of metaspace (measured: 1700 classes, +13 MB).
+CODEGEN_CACHE_ENTRIES = 4000
+
+
 def _size_shuffle_partitions(spark: SparkSession) -> None:
     """Size shuffle partitions to the core count on untuned sessions.
 
@@ -75,13 +88,30 @@ def _size_shuffle_partitions(spark: SparkSession) -> None:
     any NON-default value tuned it deliberately — leave that alone. On a
     real cluster this is sized to ~128 MB per partition of the largest
     stage instead."""
+    if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+        _set_conf(spark, "spark.sql.shuffle.partitions", str(default_parallelism()))
+
+
+#: Conf keys already warned about as static on this process's sessions.
+_STATIC_WARNED: set[str] = set()
+
+
+def _set_conf(spark: SparkSession, key: str, value: str) -> None:
+    """``spark.conf.set`` that tolerates exactly one failure: a conf that is
+    static on this session (the caller's session was built without it). That
+    is warned about once per key; every other error raises."""
     try:
-        if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(default_parallelism())
+        spark.conf.set(key, value)
+    except AnalysisException as exc:
+        if exc.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+            raise
+        if key not in _STATIC_WARNED:
+            _STATIC_WARNED.add(key)
+            warnings.warn(
+                f"{key} is static on this session; keeping its value",
+                RuntimeWarning,
+                stacklevel=3,
             )
-    except Exception:
-        pass
 
 
 def default_parallelism() -> int:
@@ -101,6 +131,16 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count: on a real cluster this
     would be sized to ~128 MB per shuffle partition of the largest stage
     (i.e. thousands of partitions at 100 TB); AQE coalesces the excess.
+
+    Contract: a query mix that repeats compiles each whole-stage-codegen
+    class once per JVM. The generated-class cache is sized
+    (``CODEGEN_CACHE_ENTRIES``) above the largest measured working set;
+    Spark's default of 100 entries is below it, so a cyclic mix missed the
+    LRU on every query and recompiled every class on every pass (measured on
+    a 4-core host at sf0.01: the 16 dashboard tiles recompiled 270 classes
+    per warm pass, which took 12.6-14.0 s; with this cache, 0 classes and
+    9.6-11.4 s). The conf is static: it only takes effect when this builder
+    creates the session, so a session built elsewhere keeps Spark's default.
     """
     par = default_parallelism()
     builder = (
@@ -117,6 +157,7 @@ def get_spark(
         # also deletes the checkpoint FILES on GC, which otherwise accumulate
         # per invocation forever.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
@@ -393,14 +434,12 @@ def ensure_runtime_conf(spark: SparkSession) -> None:
     """Apply runtime-settable engine configs to a foreign session.
 
     The correctness driver passes in its own SparkSession; these SQL confs
-    are all runtime-settable so the engine behaves identically there.
+    are all runtime-settable so the engine behaves identically there. A conf
+    that is static on the given session is kept with a one-time warning;
+    any other failure to set one raises. Re-applying on every call is cheap
+    (0.8 ms per call, measured), so it is not memoized.
     """
     for k, v in RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Static conf on this build — harmless to skip; catalog readers
-            # have explicit fallbacks for the load-bearing ones.
-            pass
+        _set_conf(spark, k, v)
     _size_shuffle_partitions(spark)
     _apply_checkpoint_dir(spark)

@@ -241,6 +241,11 @@ def run_to_memory(
     with large state sets the conf to its state-volume target (~one store
     per core, or keyspace/128 MB); this is the same parameterised lever as
     ``session._size_shuffle_partitions``, not a local[32] constant.
+
+    With ``table=None`` the memory sink's auto-named temp view is dropped
+    before returning: the returned frame stays readable, and a long session
+    does not accumulate one view per call. A named ``table`` stays
+    registered for the caller.
     """
     spark = df.sparkSession
     name = table or f"mem_{uuid.uuid4().hex[:12]}"
@@ -266,4 +271,9 @@ def run_to_memory(
         q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
-    return spark.table(name)
+    out = spark.table(name)
+    if table is None:
+        # The analysed frame holds the sink's plan directly; the auto-named
+        # view would otherwise outlive it, one per call.
+        spark.catalog.dropTempView(name)
+    return out
