@@ -694,13 +694,13 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned on doc_id, and the survivor window partitions by
     cluster_rep — no stage touches pair-count-squared data."""
     from ..catalog import Catalog as _Cat
-    from ..operators.staging import staged_edges
+    from .dedup import banded_minhash_pairs
     from .graph import connected_components
 
     cat = _Cat(spark, sf_dir)
-    # r11: staged doc_pairs distillation (operators/staging.py) — one
-    # pair build per fixture, shared by the document-cluster family.
-    edges = staged_edges(spark, sf_dir, "doc_pairs").select("doc_a", "doc_b")
+    edges = banded_minhash_pairs(cat.documents.select("doc_id", "text")).select(
+        "doc_a", "doc_b"
+    )
     labels = connected_components(cat.documents.select("doc_id"), edges).select(
         "doc_id", "cluster_rep"
     )

@@ -200,7 +200,19 @@ def compact_files(
         return files_before, files_before  # already compact — no rewrite
 
     tmp = path.rstrip("/") + ".compact-tmp"
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
+    # coalesce can only lower the read's partition count, and the scan
+    # packs small files into as few as one partition per core; capping the
+    # split size at the output file size keeps at least n_out partitions.
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)  # None: not set in this session
+    spark.conf.set(key, str(max(1, total_bytes // n_out)))
+    try:
+        spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
     # atomic-ish swap: the rewrite lands fully before the old dir is replaced
     old = path.rstrip("/") + ".compact-old"
     shutil.rmtree(old, ignore_errors=True)

@@ -53,7 +53,7 @@ def test_registry_priority_window():
     }
     assert core_regressions <= set(plans.PRIORITY)
     rotated_in = {
-        # rule 2 sample: plan/oracle changed in r12 (staged corpus_pairs /
+        # rule 2 sample: plan/oracle changed in r12 (corpus pair and
         # doc_tf consumers; the kcore peel rework; the hyperplane contract)
         "pipeline_corpus_build", "pipeline_drop_reasons",
         "graph_kcore", "similarity_ann_hyperplane_recall",
@@ -911,3 +911,36 @@ def test_wire_source_streams_from_scratch_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "SCRATCH_CWD_OK 6" in proc.stdout
+
+
+def test_option_surface_is_deployment_settings_only():
+    """The package reads only deployment settings from its environment and
+    defines no engine conf keys of its own: every other knob was either
+    unused or served a path no caller took. A new option has to be added
+    here, where review sees it."""
+    import re
+
+    pkg = os.path.join(REPO_ROOT, "hybrid_nutrition_data_pipeline_batch_streaming_spark")
+    env_read = re.compile(
+        r"""environ(?:\.get\(|\[)\s*["']([A-Za-z0-9_]+)["']|getenv\(\s*["']([A-Za-z0-9_]+)["']"""
+    )
+    env_keys, conf_keys, unparsed = set(), set(), []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            src = open(os.path.join(root, f), encoding="utf-8").read()
+            reads = env_read.findall(src)
+            env_keys |= {a or b for a, b in reads}
+            if len(re.findall(r"\b(?:environ|getenv)\b", src)) != len(reads):
+                unparsed.append(f)
+            conf_keys |= set(re.findall(r"spark\.hybridnutrition\.[A-Za-z0-9_.]+", src))
+    assert not unparsed, f"environment access the scan cannot name: {unparsed}"
+    assert env_keys == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_CHECKPOINT_DIR",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_DRIVER_MEMORY",
+        "TEST_ORACLE_SF_DIR",
+    }
+    assert conf_keys == set()

@@ -415,9 +415,8 @@ def test_scratch_checkpoint_gates_on_deployment(spark, tmp_path):
     are unrecoverable — losing an executor mid-loop fails the query. The
     scratch_checkpoint helper must therefore gate on deployment: local
     master → localCheckpoint even when a reliable dir is configured (the
-    measured 253→207 s kcore win); explicit conf override → honored both
-    ways. (The distributed-master branch can't execute on local[*]; its
-    selection logic is what the override paths exercise.)"""
+    measured 253→207 s kcore win). (The distributed-master branch can't
+    execute on local[*].)"""
     import os
 
     from hybrid_nutrition_data_pipeline_batch_streaming_spark.session import (
@@ -428,54 +427,15 @@ def test_scratch_checkpoint_gates_on_deployment(spark, tmp_path):
     assert sc.master.startswith("local")
     ckpt = str(tmp_path / "reliable")
     sc.setCheckpointDir(ckpt)
-    key = "spark.hybridnutrition.scratchCheckpoint"
     try:
         df = spark.range(10)
-        # auto + local master: local blocks, nothing written to the dir.
-        scratch_checkpoint(df).collect()
+        assert scratch_checkpoint(df).count() == 10
         assert not [
             f for root, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")
-        ], "local master must not write reliable checkpoints in auto mode"
-        # reliable override: files land under the configured dir.
-        spark.conf.set(key, "reliable")
-        scratch_checkpoint(df).collect()
-        assert [
-            f for root, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")
-        ], "reliable override must write to the checkpoint dir"
-        # local override with a dir configured: still local blocks (count
-        # of reliable files unchanged).
-        before = sum(
-            len(fs) for _, _, fs in os.walk(ckpt)
-        )
-        spark.conf.set(key, "local")
-        scratch_checkpoint(df).collect()
-        assert sum(len(fs) for _, _, fs in os.walk(ckpt)) == before
+        ], "local master must not write reliable checkpoints"
     finally:
-        spark.conf.unset(key)
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
         assert sc.getCheckpointDir() is None
-
-
-def test_scratch_checkpoint_reliable_without_dir_raises(spark):
-    """ADVICE r8: an explicit ``scratchCheckpoint=reliable`` override with
-    NO checkpoint dir configured must fail loudly — the old silent path
-    degraded to a plain DESERIALIZED localCheckpoint, which is neither
-    reliable nor the serialized level the helper's own M=100 OOM analysis
-    requires (the worst of both)."""
-    import pytest as _pytest
-
-    from hybrid_nutrition_data_pipeline_batch_streaming_spark.session import (
-        scratch_checkpoint,
-    )
-
-    assert spark.sparkContext.getCheckpointDir() is None
-    key = "spark.hybridnutrition.scratchCheckpoint"
-    spark.conf.set(key, "reliable")
-    try:
-        with _pytest.raises(RuntimeError, match="checkpoint dir"):
-            scratch_checkpoint(spark.range(5))
-    finally:
-        spark.conf.unset(key)
 
 
 def test_query_invocation_releases_previous_caches(spark):
@@ -1219,7 +1179,7 @@ def test_multiprobe_wide_recall_contract(spark):
     assert set(want) < full
 
 
-def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path, monkeypatch):
+def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path):
     """r11 kcore early-exit: when a peel round drops no node, the loop
     fills the remaining census rows instead of rewriting the edge set
     (survivor-count == node-count is a sound set-equality test under
@@ -1227,9 +1187,6 @@ def test_kcore_fixpoint_fill_matches_full_peel(spark, tmp_path, monkeypatch):
     fixpoint fires EARLY: a dense biclique (nothing ever peels — round-1
     exit must still emit all KCORE_ROUNDS identical rows) and a sparse
     star (cascades to empty, then stays all-zero)."""
-    # ADVICE r11: isolate this test's synthetic-fixture staged entries so
-    # they never land in (or prune) the repo's shared staging root.
-    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path / "staged"))
     from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans.graph import (
         KCORE_K,
         KCORE_ROUNDS,

@@ -1241,3 +1241,42 @@ def test_bfs_checkpoints_single_orientation(spark):
     # mirrored orientation appears as a projection over the same scan, so
     # the plan carries no second fact-table distinct.
     assert plan.count("LogicalRDD") >= 2  # checkpointed edges + frontiers
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_connected_components",
+        "dedup_keep_best",
+        "pipeline_corpus_build",
+        "pipeline_drop_reasons",
+        "er_golden_records",
+    ],
+)
+def test_connected_components_edges_within_nodes(spark, monkeypatch, name):
+    """connected_components seeds its labels from the edge endpoints alone
+    and drops the nodes⋈edge-endpoints semi-join, which is only the
+    identity when every endpoint is a node. Every caller that reaches it
+    must hand it edges whose endpoints anti-joined with ``nodes`` are
+    empty."""
+    from pyspark.sql import functions as F
+
+    from hybrid_nutrition_data_pipeline_batch_streaming_spark.plans import (
+        corpus,
+        graph,
+    )
+
+    real = graph.connected_components
+    calls = []
+
+    def checked(nodes, edges, *args, **kwargs):
+        ends = edges.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
+        stray = ends.join(nodes.select("doc_id"), "doc_id", "left_anti")
+        assert stray.count() == 0, f"{name}: edge endpoints outside nodes"
+        calls.append(name)
+        return real(nodes, edges, *args, **kwargs)
+
+    monkeypatch.setattr(graph, "connected_components", checked)
+    monkeypatch.setattr(corpus, "connected_components", checked)
+    assert plans.QUERIES[name](spark, SF).count() > 0
+    assert calls
